@@ -45,44 +45,6 @@ GUARD_EXTENDED_ANCHOR_SEC = 5.028
 #: from the SAME r4 artifact's min_total_sec fields, so the 2× criterion
 #: is unchanged in spirit — only its noise floor moved.
 GUARD_ANCHOR_MIN_SEC = 7.739  # BENCH_r04.json parsed.min_total_sec
-#: r12: the EXTENDED anchor is re-derived (r11 judge order #6) for two
-#: reasons at once: (a) the extended set itself grew — the four r11
-#: format-tier keys joined it so they carry per-key anchors — and (b)
-#: the r4-derived 4.610 had drifted to 1.13×→1.46× across three rounds
-#: with the code untouched (box degradation), putting honest keys on a
-#: path to spurious 2× trips. New basis: the BEST extended min-of-5
-#: total across three same-day quiet-box runs, committed verbatim as
-#: artifacts/bench_quiet_r12_run{1,2,3}.json (test-pinned — the anchor
-#: cannot be edited without committing a new artifact). The r4 value is
-#: kept below for cross-round artifact comparisons only.
-#: Phase-consistency (r12, second derivation): the FIRST quiet-box trio
-#: kept one run from a transiently ~2x-faster box phase; minning anchors
-#: across DIFFERENT phases plants spurious trips (that run's own code
-#: state re-timed scan_warc_http_payloads at 2.35 s hours after
-#: recording 0.99 s). All three committed runs now come from the same
-#: phase, verified by re-timing — an anchor is only meaningful relative
-#: to a box state the driver can actually reproduce.
-#: r13: re-derived DOWN to the best of the committed r13 quiet trio —
-#: the round's decode-path optimizations (windowed zstd bit reader,
-#: vectorized level/bit unpack, bulk LZ copies) made the old basis
-#: slack (extended ran 0.77× of it on a loaded box). Tightening after
-#: a real speedup keeps the 2× guard meaningful for the faster code.
-#: r13b: the extended set grew by the five r12/r13 format-tier keys
-#: (they now carry per-key anchors), so the TOTAL anchor re-bases to
-#: the best of the committed 18-key r13b quiet trio; the 13-key 8.876
-#: basis is kept below for cross-era artifact comparisons.
-#: r13d: the two index-audit keys (scan_parquet_raw_pageindex /
-#: scan_orc_raw_rowindex) joined the set — re-based to the best of the
-#: committed 20-key r13d quiet trio (same rule: the total anchor only
-#: compares runs of the same set; per-key anchors stay
-#: best-recorded-wins across ALL quiet artifacts).
-#: r13e: the parquet bloom audit completed the pruning-metadata triad
-#: — re-based to the best of the committed 21-key r13e quiet trio.
-GUARD_EXTENDED_ANCHOR_MIN_SEC = 13.954
-GUARD_EXTENDED_ANCHOR_MIN_SEC_R13D_20KEY = 12.21  # historical (20-key set)
-GUARD_EXTENDED_ANCHOR_MIN_SEC_R13B_18KEY = 10.192  # historical (18-key set)
-GUARD_EXTENDED_ANCHOR_MIN_SEC_R13_13KEY = 8.876  # historical (13-key set)
-GUARD_EXTENDED_ANCHOR_MIN_SEC_R12 = 11.656  # historical (r12 trio basis)
 GUARD_EXTENDED_ANCHOR_MIN_SEC_R4 = 4.610  # historical (old 9-key set, r4 box)
 ANCHOR_SF = 0.1
 #: 1-min load average above which the recorded totals are known (r5–r7)
@@ -246,7 +208,6 @@ def compact_from_full(full: dict) -> dict:
         "jvm_probe_minmax": full["jvm_probe"]["minmax"],
         "loadavg_before": full["loadavg_before"],
         "loaded_box": guard["loaded_box"],
-        "zstd_synthesis": full["zstd_synthesis"],
         "guard_basis": guard["basis"],
         "anchor_min_sec": guard["anchor_min_sec"],
         "extended_anchor_min_sec": guard["extended_anchor_min_sec"],
@@ -282,80 +243,15 @@ def guard_verdict(
             f"exceeds 2x the methodology-matched r4 min anchor "
             f"({GUARD_ANCHOR_MIN_SEC}s at sf{ANCHOR_SF})"
         )
-    if extended_min_total_sec > 2 * GUARD_EXTENDED_ANCHOR_MIN_SEC:
+    if (GUARD_EXTENDED_ANCHOR_MIN_SEC is not None
+            and extended_min_total_sec > 2 * GUARD_EXTENDED_ANCHOR_MIN_SEC):
         msgs.append(
             f"BENCH REGRESSION: extended min-of-5 total "
-            f"{extended_min_total_sec}s exceeds 2x the methodology-matched "
-            f"r4 min anchor ({GUARD_EXTENDED_ANCHOR_MIN_SEC}s at "
+            f"{extended_min_total_sec}s exceeds 2x the best recorded "
+            f"quiet-box min ({GUARD_EXTENDED_ANCHOR_MIN_SEC}s at "
             f"sf{ANCHOR_SF})"
         )
     return msgs
-
-#: Per-key regression anchors (r10 judge order #4, re-derived r12 per
-#: r11 judge order #6): each key's BEST min-of-5 across three same-day
-#: QUIET-BOX runs (artifacts/bench_quiet_r12_run{1,2,3}.json, committed
-#: verbatim and test-pinned). The previous r4–r6-sourced bests had
-#: drifted 1.1–1.5× with the code untouched — box degradation, proven
-#: in-round by timing round-11 code side by side with HEAD (identical
-#: numbers) — so keys like sim_topk (old anchor 0.428, today's quiet
-#: best 0.492, one in-bench run at 1.03) were on a path to spurious 2×
-#: trips. Re-basing to today's quiet box restores the headroom the 2×
-#: criterion was designed to give; a real regression still trips
-#: because anchors can only change by committing a new quiet-box
-#: artifact. The four r11 format-tier keys get first anchors here.
-#: r13: the basis is the UNION of the r12 and r13 quiet trios
-#: (artifacts/bench_quiet_r1{2,3}_run*.json) — best-recorded-wins, so
-#: new artifacts can only TIGHTEN anchors (two did: sim_topk,
-#: topk_per_group). The r13 trio additionally carries the
-#: calibration_sec box-phase fingerprint and passes the stronger
-#: quietness gate (loadavg<1, calibration + per-key cross-run spread
-#: bands — tests/test_bench_guard.py).
-PER_KEY_ANCHOR_MIN_SEC = {
-    "agg_groupby_multi": 0.439,
-    "join_inner": 0.358,
-    "join_asof": 0.29,
-    "win_rank": 0.397,
-    "topk_per_group": 0.293,
-    "explode_split": 0.196,
-    "stream_window_tumbling": 0.24,
-    "dedup_exact": 0.174,
-    "dedup_minhash": 0.72,
-    "sim_topk": 0.4,
-    "sim_topk_ivf": 0.955,
-    "text_tokens": 0.235,
-    "text_pii_scrub": 0.191,
-    "llm_data_prep": 0.4,
-    "tpch_q9_product_profit": 0.608,
-    "text_decontaminate": 0.661,
-    "dedup_passage_rewrite": 0.841,
-    "dedup_containment": 0.941,
-    "join_spatial_radius": 0.414,
-    "dedup_semantic": 0.686,
-    "text_url_canonicalize": 0.221,
-    "agg_bitmap_distinct": 0.186,
-    "sessionize_capped": 0.437,
-    "join_interval_overlap": 0.275,
-    "corpus_shuffle": 0.269,
-    # the format-tier keys carry the round's decode-path speedups:
-    # scan_orc_raw_table 1.9 -> 0.53 (windowed zstd bit reader),
-    # scan_parquet_raw_numeric 2.102 -> 1.191 (bulk LZ copies +
-    # vectorized level unpack)
-    "scan_parquet_raw_numeric": 1.191,
-    "scan_orc_column": 0.193,
-    "scan_orc_raw_table": 0.53,
-    "scan_warc_http_payloads": 1.771,
-    # first anchors for the five keys the r13b trio added to EXTENDED
-    "scan_parquet_raw_nested": 0.312,
-    "scan_parquet_raw_temporal": 0.963,
-    "scan_orc_raw_nested": 0.385,
-    "scan_warc_http_charsets": 0.273,
-    "scan_orc_raw_struct": 0.228,
-    # first anchors for the two r13d index-audit keys
-    "scan_parquet_raw_pageindex": 0.269,
-    "scan_orc_raw_rowindex": 0.243,
-    # ... and the r13e bloom-audit key
-    "scan_parquet_raw_bloom": 0.332,
-}
 
 
 def per_key_verdict(mins: dict[str, float]) -> tuple[list[str], dict]:
@@ -441,6 +337,50 @@ EXTENDED = [
     # triad (first anchor: the r13e quiet trio)
     "scan_parquet_raw_bloom",
 ]
+
+#: the committed quiet-box bench runs the regression anchors derive from
+QUIET_ARTIFACT_GLOB = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "artifacts",
+    "bench_quiet_r1*_run*.json",
+)
+
+
+def derive_anchors(
+    artifacts: list[dict], extended: list[str]
+) -> tuple[dict[str, float], float | None]:
+    """Regression anchors from recorded bench artifacts: ``(per-key
+    anchors, extended-total anchor)``. A key's anchor is the best
+    (lowest) min-of-5 any artifact recorded for it, so committing an
+    artifact can only tighten anchors. The extended-total anchor is the
+    best ``extended_min_total_sec`` among artifacts that timed exactly
+    the ``extended`` set (totals of different sets do not compare), or
+    None when no artifact did."""
+    best: dict[str, float] = {}
+    for a in artifacts:
+        for k, v in {**a["queries_min"], **a["extended_queries_min"]}.items():
+            best[k] = min(v, best.get(k, v))
+    totals = [
+        a["extended_min_total_sec"] for a in artifacts
+        if sorted(a["extended_queries_min"]) == sorted(extended)
+    ]
+    return best, (min(totals) if totals else None)
+
+
+def _quiet_artifacts() -> list[dict]:
+    import glob
+
+    out = []
+    for path in sorted(glob.glob(QUIET_ARTIFACT_GLOB)):
+        with open(path) as fh:
+            out.append(json.load(fh))
+    return out
+
+
+#: per-key 2x guard anchors and the extended-total anchor, derived at
+#: import from the committed quiet-box artifacts (:func:`derive_anchors`)
+PER_KEY_ANCHOR_MIN_SEC, GUARD_EXTENDED_ANCHOR_MIN_SEC = derive_anchors(
+    _quiet_artifacts(), EXTENDED
+)
 
 
 def main() -> None:
@@ -539,10 +479,6 @@ def _run_bench(probe_pool, load_before) -> None:
         extended[name], extended_min[name], _ = timed(name)
         probe_tail[name] = mc_probe(probe_pool)
         jvm_tail[name] = jvm_probe(spark)
-
-    from dynamic_spark_spark.llmops.zstd import zstd_synthesis_mode
-
-    zstd_synthesis = zstd_synthesis_mode()
 
     m = re.search(r"sf([\d.]+)", SF_DIR)
     sf = float(m.group(1).rstrip(".")) if m else None
@@ -659,11 +595,6 @@ def _run_bench(probe_pool, load_before) -> None:
             "retried_keys": retried,
             "first_pass_min_sec": first_pass_min,
         },
-        # which encoder wrote the zstd fixtures this run (r11
-        # verdict: a silent CLI→pure fallback let "proves real
-        # libzstd output" wear the wrong label) — "cli" = real
-        # libzstd frames, "pure" = this repo's own encoder
-        "zstd_synthesis": zstd_synthesis,
         "artifact_path": ARTIFACT_PATH,
         # self-adjudicating guard block: the artifact carries its own
         # verdict (min-of-5 basis) and noise context, so a reader

@@ -19,7 +19,11 @@ allocation is bounded:
   form without touching ZIP;
 - :func:`tar_member_walk` / :func:`scan_tar_members` — the ustar twin
   (octal fields, spaces-substituted header checksum, 512-byte block
-  walk), the SEQUENTIAL framing that splits like WARC on a cluster.
+  walk), the SEQUENTIAL framing that splits like WARC on a cluster;
+- the compressed-tar twins (``.tgz``/``.tbz``/``.txz``/``.tar.zst``)
+  decode through native codecs — the stdlib's zlib/bz2/lzma and
+  pyarrow's libzstd — under the same member caps; only the container
+  walks are hand-rolled.
 
 Reference basis: the reference engine's source surface is generic
 file-format plugins (docs/ScalaSparkCompute-sparkcompute.md:5-6 names
@@ -990,17 +994,11 @@ def scan_xlsx_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def tzst_archive_bytes(doc_id: int, text: str) -> bytes:
-    """``.tar.zst``: the tar archive as one zstd frame. Written by the
-    REAL ``zstd`` CLI when one exists on the box (r11: the walk then
-    proves this repo's decoder against genuine libzstd output —
-    predefined tables, FSE weights and all — and synthesis stops paying
-    for pure-Python entropy ENCODE, the r10 scale probes'
-    synthesis-bound cost); falls back to the hand-rolled encoder
-    (:mod:`llmops.zstd`, real Huffman/FSE compression, not store mode)
-    when no CLI is installed."""
-    from dynamic_spark_spark.llmops.zstd import zstd_compress_real
+    """``.tar.zst``: the tar archive as one zstd frame (libzstd, level
+    3)."""
+    from dynamic_spark_spark.llmops.zstd import zstd_compress
 
-    return zstd_compress_real(tar_archive_bytes(doc_id, text), level=3)
+    return zstd_compress(tar_archive_bytes(doc_id, text), level=3)
 
 
 def tzst_member_walk(raw: bytes, cap: int = TAR_MEMBER_CAP):
@@ -1021,12 +1019,10 @@ def tzst_member_walk(raw: bytes, cap: int = TAR_MEMBER_CAP):
 def scan_tzst_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``.tar.zst`` ingest — the fourth compressed-tar codec under the
     one shared oracle, and the one modern mirrors are converging on.
-    Unlike the gzip/bz2/xz twins (stdlib codecs), the DECODER here is
-    the repo's own zstd implementation, and the frames come from the
-    real ``zstd`` CLI when one is installed (own encoder otherwise), so
-    the hash match proves the full entropy pipeline — against genuine
-    libzstd output where possible — composed with the checksum-verified
-    ustar walk. Same split-unit caveat as .tgz: one frame per archive,
+    Like the gzip/bz2/xz twins (stdlib codecs), the frames decode
+    through a native codec (pyarrow's libzstd); the hash match proves
+    the capped stream decode composed with the checksum-verified ustar
+    walk. Same split-unit caveat as .tgz: one frame per archive,
     archive-per-task."""
     import pandas as pd
 

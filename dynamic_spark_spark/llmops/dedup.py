@@ -34,9 +34,9 @@ SHINGLE_N = 5  # character shingles
 #: quadratic hot buckets at scale (the cap keeps candidate counts linear).
 MAX_SHINGLE_DF = 100
 
-#: salt fan-out for the skew-bounded posting-list cascade (env-tunable for
-#: cluster deployments; the per-buffer bound below scales as 1/salts).
-POSTING_SALTS = int(__import__("os").environ.get("DSS_POSTING_SALTS", "64"))
+#: salt fan-out for the skew-bounded posting-list cascade (the per-buffer
+#: bound below scales as 1/salts).
+POSTING_SALTS = 64
 
 
 def _posting_partials(exploded: DataFrame, key: str, cap: int) -> DataFrame:

@@ -789,10 +789,10 @@ def http_payload_decode(raw: bytes, cap: int = HTTP_BODY_CAP):
     """Decode an HTTP/1.1 response payload the way a crawl pipeline
     must before it can see the document: status line, case-insensitive
     headers, then Transfer-Encoding (chunked — undone FIRST, it's the
-    wire layer) and Content-Encoding (identity/gzip/deflate/zstd — the
-    zstd leg through this repo's own decoder). Returns ``(status,
-    content_type_or_None, body_bytes)`` or None; unknown codings (br,
-    compress) refuse rather than guess. Never raises."""
+    wire layer) and Content-Encoding (identity/gzip/deflate/zstd/br —
+    zstd and br through pyarrow's native codecs). Returns ``(status,
+    content_type_or_None, body_bytes)`` or None; unknown codings
+    (compress) refuse rather than guess. Never raises."""
     try:
         sep = raw.find(b"\r\n\r\n")
         if sep < 0:
@@ -864,12 +864,11 @@ def http_payload_decode(raw: bytes, cap: int = HTTP_BODY_CAP):
             if body is None:
                 return None
         elif enc == "br":
-            # native seam (r12, same pattern as the jpeg/zstd codecs):
-            # brotli has NO pure-Python tier in this repo — RFC 7932 is
-            # a from-scratch project of its own — so `br` decodes ONLY
-            # when a binding is installed and REFUSES otherwise; it
-            # never guesses
-            body = brotli_decode_native(body, cap)
+            from dynamic_spark_spark.llmops.native_codec import (
+                decompress_stream,
+            )
+
+            body = decompress_stream("brotli", body, cap)
             if body is None:
                 return None
         elif enc not in ("identity", ""):
@@ -928,8 +927,7 @@ def scan_warc_http_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The HTTP layer inside crawl records, decoded for real: each
     document becomes an HTTP/1.1 response whose body is chunked
     transfer-encoded on the wire AND content-encoded per ``doc_id % 3``
-    (identity / gzip / zstd — the zstd leg round-trips through this
-    repo's own codec), exactly the double-wrapping Common Crawl
+    (identity / gzip / zstd), exactly the double-wrapping Common Crawl
     response payloads carry. The decoder undoes chunking first, then
     the content coding, and the identity oracle hash-proves status
     parse, header fold, de-chunking, and both decompressors per row.
@@ -938,7 +936,7 @@ def scan_warc_http_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    from dynamic_spark_spark.llmops.zstd import zstd_compress_real_many
+    from dynamic_spark_spark.llmops.zstd import zstd_compress
 
     d = _staged_docs(spark, sf_dir)
 
@@ -953,27 +951,15 @@ def scan_warc_http_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
             return bytes(out)
 
         for pdf in batches:
-            # (doc_id, body) TUPLES, not a dict: keying by doc_id would
-            # dedup, desynchronizing the zstd_out iterator below if a
-            # duplicate id ever appeared in a batch (r11 ADVICE)
-            bodies = []
-            zstd_in = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                body = (text if isinstance(text, str) else "").encode("utf-8")
-                bodies.append((int(doc_id), body))
-                if int(doc_id) % 3 == 2:
-                    zstd_in.append(body)
-            # ONE CLI spawn per Arrow batch for all zstd-coded rows
-            # (per-row spawns made synthesis the 100x probe's dominant
-            # cost — the r11 review finding)
-            zstd_out = iter(zstd_compress_real_many(zstd_in, level=3))
             rows = []
-            for doc_id, body in bodies:
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                doc_id = int(doc_id)
+                body = (text if isinstance(text, str) else "").encode("utf-8")
                 mode = doc_id % 3
                 if mode == 1:
                     wire, enc = _gzip.compress(body, 6), "gzip"
                 elif mode == 2:
-                    wire, enc = next(zstd_out), "zstd"
+                    wire, enc = zstd_compress(body, level=3), "zstd"
                 else:
                     wire, enc = body, "identity"
                 payload = (
@@ -997,84 +983,6 @@ def scan_warc_http_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.mapInPandas(
         roundtrip, "doc_id long, status int, encoding string, text string"
     )
-
-
-# ---------------------------------------------------------------------------
-# brotli native seam (r12): same import-gated pattern as jpeg/zstd
-# ---------------------------------------------------------------------------
-
-_BROTLI_UNPROBED = object()
-_brotli_mod: object = _BROTLI_UNPROBED
-
-
-def brotli_backend():
-    """The optional brotli binding (the ``brotli`` or ``brotlicffi``
-    wheels), or None. Probed once per interpreter; absence is a
-    supported state. Unlike gzip/deflate/zstd there is NO pure-Python
-    tier behind this seam — RFC 7932 (context-modeled entropy over a
-    120-symbol-plus dictionary transform lattice) is a from-scratch
-    project of its own — so without a binding the ``br`` content
-    coding refuses rather than guesses."""
-    global _brotli_mod
-    if _brotli_mod is _BROTLI_UNPROBED:
-        mod = None
-        try:
-            import brotli as mod  # type: ignore[no-redef]
-        except Exception:
-            try:
-                import brotlicffi as mod  # type: ignore[no-redef]
-            except Exception:
-                mod = None
-        _brotli_mod = mod
-    return _brotli_mod
-
-
-def brotli_decode_native(body: bytes, cap: int):
-    """Decode one brotli stream via the native seam: bytes, or None
-    when no binding is installed or the stream is malformed/oversized.
-
-    The cap is enforced INCREMENTALLY (r12 advisor, html.py:1018): both
-    wheels expose a streaming decompressor (``brotli.Decompressor`` has
-    ``process()``, ``brotlicffi``'s has ``decompress()``), so the input
-    is fed in 64 KiB slices and the decode aborts as soon as cumulative
-    output exceeds the cap — a small ``br`` bomb can no longer expand
-    to arbitrary memory before a post-hoc check, the same discipline as
-    the gzip/zstd tiers. Overshoot is bounded by what one input slice
-    can emit (≤ one ~16 MiB RFC 7932 metablock), not by the bomb's
-    full expansion. A binding without a streaming class (the minimal
-    test stub, hypothetical wheels) falls back to one-shot decompress
-    with the post-hoc cap. Never raises."""
-    mod = brotli_backend()
-    if mod is None:
-        return None
-    try:
-        dec_cls = getattr(mod, "Decompressor", None)
-        if dec_cls is not None:
-            d = dec_cls()
-            step = getattr(d, "process", None) or getattr(
-                d, "decompress", None
-            )
-            if step is not None:
-                out = []
-                total = 0
-                for off in range(0, len(body), 65536):
-                    piece = step(body[off : off + 65536])
-                    total += len(piece)
-                    if total > cap:
-                        return None
-                    out.append(piece)
-                fin = getattr(d, "is_finished", None) or getattr(
-                    d, "finished", None
-                )
-                if fin is not None and not fin():
-                    return None  # truncated stream
-                return b"".join(out)
-        out1 = mod.decompress(body)
-    except Exception:
-        return None
-    if len(out1) > cap:
-        return None
-    return out1
 
 
 # ---------------------------------------------------------------------------

@@ -10,10 +10,10 @@ the way down and reads actual COLUMN VALUES out of an ORC file:
       then data region — ORC spec §'Stripes')
     → chunk-framed decompression (3-byte ``(len << 1) | is_original``
       headers, ORC spec §'Compression') over NONE / ZLIB (raw DEFLATE)
-      / SNAPPY / LZ4 / ZSTD — the last three through THIS REPO'S own
-      pure-Python decoders, so reading a default-written Spark 4 file
-      (zstd codec) exercises the RFC 8878 tier inside a second
-      container format
+      / SNAPPY / LZ4 / ZSTD — SNAPPY and ZSTD through pyarrow's native
+      codecs (:mod:`native_codec`), LZ4 blocks through
+      :mod:`lz4_hadoop` (a chunk carries no decompressed length, which
+      pyarrow's lz4_raw would need)
     → PRESENT stream (byte-RLE over MSB-first bit-packed booleans)
     → DATA stream: integer Run-Length Encoding v2, all four
       sub-encodings — SHORT_REPEAT, DIRECT, PATCHED_BASE, DELTA
@@ -372,10 +372,9 @@ _COMP_NONE, _COMP_ZLIB, _COMP_SNAPPY, _COMP_LZO, _COMP_LZ4, _COMP_ZSTD = range(6
 
 def _orc_chunk_decode(chunk: bytes, kind: int, cap: int):
     """One compressed chunk → bytes or None. ZLIB is raw DEFLATE;
-    SNAPPY/LZ4(block)/ZSTD(frame) route through THIS REPO'S pure-Python
-    decoders — reading a default-written Spark ORC file exercises the
-    zstd tier end to end. LZO is refused (no implementation — refuse,
-    don't guess)."""
+    SNAPPY (sized by its preamble) and ZSTD (streamed, capped) decode
+    natively; LZ4 blocks go through :mod:`lz4_hadoop`. LZO is refused
+    (no implementation — refuse, don't guess)."""
     if kind == _COMP_ZLIB:
         import zlib
 
@@ -648,8 +647,8 @@ def read_orc_int_column(raw: bytes, column: str):
     """Read every value of a flat integer column (SHORT/INT/LONG,
     DIRECT_V2 encoding) straight from an ORC file's bytes: footer type
     tree → stripe directory → stripe footers → in-order stream offsets
-    → chunk-framed decompression (NONE/zlib/snappy/lz4/zstd — the last
-    three through this repo's own decoders) → byte-RLE PRESENT (when
+    → chunk-framed decompression (NONE/zlib/snappy/lz4/zstd) →
+    byte-RLE PRESENT (when
     nulls exist) → RLEv2 DATA. Returns non-null values in row order, or
     None. Never raises."""
     try:
@@ -1804,10 +1803,8 @@ def scan_orc_raw_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     format over: Spark 4 writes ORC with zstd compression by default,
     so every stream this reader touches (footer, stripe footers,
     PRESENT, DATA, LENGTH, DICTIONARY_DATA) arrives as ORC chunk
-    framing over zstd frames that THIS REPO'S pure-Python RFC 8878
-    decoder decompresses — the r11 real-libzstd decode surface proven a
-    second way, inside another container format, against orc-core's
-    writer. doc_id comes through RLEv2, text through the DIRECT_V2 or
+    framing over zstd frames, checked against orc-core's writer.
+    doc_id comes through RLEv2, text through the DIRECT_V2 or
     DICTIONARY_V2 string layout (whichever orc-core picks per stripe).
     Identity oracle; per-file mapInPandas, zero shuffle; session-staged
     fixture, lazy returned plan."""
@@ -1949,8 +1946,7 @@ def scan_orc_raw_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ORC compound-type tier on the corpus' own nested table — the
     scan_parquet_raw_nested twin, one format over: Spark writes
     ``embeddings`` (vec_id + embedding ``list<float>``) as DEFAULT ORC
-    (zstd chunk framing — every stream routes through this repo's own
-    RFC 8878 decoder), and every row of the list column is recovered
+    (zstd chunk framing), and every row of the list column is recovered
     byte-walked with no ORC library: LIST-node PRESENT + LENGTH
     streams, child-column PRESENT + IEEE-float DATA sized by the sum of
     lengths, zipped against the RLEv2-decoded ``vec_id`` with both

@@ -1,4 +1,4 @@
-"""Parquet DATA-path read from raw bytes — no parquet library anywhere.
+"""Parquet DATA-path read from raw bytes — no parquet reader anywhere.
 
 The footer audit (:mod:`parquet_footer`) proves the metadata layer; this
 module walks the rest of the way down and reads actual COLUMN VALUES out
@@ -8,10 +8,9 @@ of a Spark-written, snappy-compressed parquet file:
       FLBA type_length)
     → row groups → column-chunk metadata
     → page headers (Thrift compact, at their byte offsets)
-    → page decompression: SNAPPY (pure-Python tag walk — parquet's
-      default codec), GZIP (stdlib), ZSTD and LZ4_RAW (this repo's own
-      decoders — a zstd-parquet lakehouse table reads with no native
-      codec anywhere)
+    → page decompression: SNAPPY (parquet's default codec) and ZSTD
+      through pyarrow's native codecs (:mod:`native_codec`, sized by
+      the page header), GZIP (stdlib), LZ4_RAW (:mod:`lz4_hadoop`)
     → definition levels (RLE/bit-packed hybrid, OPTIONAL columns only —
       REQUIRED columns carry no def-levels block, parquet-format.md)
     → REPETITION levels (r12): ``list<scalar>`` columns decode through
@@ -70,10 +69,10 @@ of a Spark-written, snappy-compressed parquet file:
 
 Out of scope, refused explicitly: LZO/BROTLI/legacy-LZ4 codecs.
 
-Every layer is an independent re-implementation forced to agree with
-parquet-mr (the JVM writer) through the real bytes, and the keys'
-oracles are identity projections — a hash match means thrift field
-walks, the schema tree, the codec decoders, the RLE hybrid, and the
+Every layer above the page codecs is an independent re-implementation
+forced to agree with parquet-mr (the JVM writer) through the real
+bytes, and the keys' oracles are identity projections — a hash match
+means thrift field walks, the schema tree, the RLE hybrid, and the
 value decoders are all correct simultaneously. pytest additionally
 pins the chain against pyarrow-written files (a THIRD independent
 writer) across a writer-knob matrix AND hypothesis-generated random
@@ -92,6 +91,7 @@ import zlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dynamic_spark_spark.llmops.native_codec import decompress_sized, snappy_length
 from dynamic_spark_spark.llmops.parquet_footer import _Compact
 from dynamic_spark_spark.llmops.zstd import xxh64
 from dynamic_spark_spark.registry import query
@@ -115,72 +115,12 @@ _TYPE_BYTES = {_T_INT32: 4, _T_INT64: 8, _T_FLOAT: 4, _T_DOUBLE: 8}
 
 
 def snappy_decompress(src: bytes, cap: int = PAGE_CAP):
-    """Pure-Python snappy decode (google/snappy format_description.txt,
-    public): varint preamble with the uncompressed length, then a tag
-    stream of literals and 1/2/4-byte-offset copies. Returns None for
-    malformed input; never raises."""
-    try:
-        total = 0
-        shift = 0
-        pos = 0
-        while True:
-            b = src[pos]
-            pos += 1
-            total |= (b & 0x7F) << shift
-            if not b & 0x80:
-                break
-            shift += 7
-            if shift > 32:
-                return None
-        if total > cap:
-            return None
-        out = bytearray()
-        olen = 0  # tracked locally — len(out) per tag was ~15% of decode
-        n = len(src)
-        while pos < n:
-            tag = src[pos]
-            pos += 1
-            kind = tag & 3
-            if kind == 0:  # literal
-                ln = tag >> 2
-                if ln >= 60:
-                    extra = ln - 59
-                    ln = int.from_bytes(src[pos : pos + extra], "little")
-                    pos += extra
-                ln += 1
-                if pos + ln > n or olen + ln > total:
-                    return None
-                out += src[pos : pos + ln]
-                olen += ln
-                pos += ln
-                continue
-            if kind == 1:  # copy, 1-byte offset
-                ln = ((tag >> 2) & 0x7) + 4
-                offset = ((tag & 0xE0) << 3) | src[pos]
-                pos += 1
-            elif kind == 2:  # copy, 2-byte offset
-                ln = (tag >> 2) + 1
-                offset = src[pos] | (src[pos + 1] << 8)
-                pos += 2
-            else:  # copy, 4-byte offset
-                ln = (tag >> 2) + 1
-                offset = int.from_bytes(src[pos : pos + 4], "little")
-                pos += 4
-            if offset == 0 or offset > olen or olen + ln > total:
-                return None
-            start = olen - offset
-            if offset >= ln:  # disjoint: one bulk slice (r13 — the
-                #               byte-wise loop dominated page decode)
-                out += out[start : start + ln]
-            else:  # overlapping: the copy repeats every `offset` bytes
-                pattern = bytes(out[start:])
-                out += (pattern * ((ln + offset - 1) // offset))[:ln]
-            olen += ln
-        if olen != total:
-            return None
-        return bytes(out)
-    except IndexError:
-        return None
+    """Decode one snappy block through the native codec, sized by its
+    own varint preamble (never by a caller's bound, which pyarrow would
+    pad). Returns None for malformed input or a preamble over ``cap``;
+    never raises."""
+    size = snappy_length(src or b"")
+    return None if size is None else decompress_sized("snappy", src, size, cap)
 
 
 #: powers of two for the vectorized bit-unpack below (int64 so the
@@ -271,30 +211,30 @@ def _rle_bitpacked_bools(data: bytes, bit_width: int, count: int):
         return None
 
 
+#: parquet CompressionCodec enum → pyarrow codec name, for the codecs
+#: decoded natively
+_NATIVE_CODECS = {1: "snappy", 6: "zstd"}
+
+
 def _codec_decompress(codec: int, body: bytes, uncompressed: int):
-    """Parquet CompressionCodec enum → page bytes. SNAPPY/ZSTD/LZ4_RAW
-    route through this repo's own pure-Python decoders (a zstd-parquet
-    lakehouse table reads with no native codec anywhere); GZIP is the
-    stdlib's zlib with the gzip wrapper. LZO/BROTLI/legacy-LZ4 (Hadoop
-    4-byte-framed, deprecated by parquet-format) are refused — refuse,
-    don't guess."""
+    """Parquet CompressionCodec enum → page bytes of exactly
+    ``uncompressed`` length, or None. SNAPPY and ZSTD decode through
+    pyarrow's native codecs, GZIP through the stdlib's zlib, LZ4_RAW
+    through :mod:`lz4_hadoop` (pyarrow's lz4_raw cannot report a short
+    output). LZO/BROTLI/legacy-LZ4 (Hadoop 4-byte-framed, deprecated by
+    parquet-format) are refused — refuse, don't guess."""
     cap = max(uncompressed, 1)
     if codec == 0:  # UNCOMPRESSED
         return body
-    if codec == 1:  # SNAPPY
-        return snappy_decompress(body, cap)
+    if codec in _NATIVE_CODECS:
+        return decompress_sized(_NATIVE_CODECS[codec], body, uncompressed,
+                                PAGE_CAP)
     if codec == 2:  # GZIP: full member (header + deflate + trailer)
-        import zlib
-
         try:
             out = zlib.decompressobj(wbits=31).decompress(body, cap + 1)
         except zlib.error:
             return None
         return out if len(out) <= cap else None
-    if codec == 6:  # ZSTD: one frame per page
-        from dynamic_spark_spark.llmops.zstd import zstd_decompress
-
-        return zstd_decompress(body, cap)
     if codec == 7:  # LZ4_RAW: one lz4 block per page
         from dynamic_spark_spark.llmops.lz4_hadoop import lz4_block_decompress
 
@@ -2668,7 +2608,7 @@ def scan_parquet_raw_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     disabled so the page payload is honest PLAIN int64), the files are
     re-scanned as binary, and the ``doc_id`` column is recovered byte by
     byte — Thrift footer walk, schema tree, page-header walk at real
-    offsets, pure-Python SNAPPY, RLE/bit-packed definition levels,
+    offsets, SNAPPY page decode, RLE/bit-packed definition levels,
     little-endian PLAIN. The identity oracle hash-proves all the layers
     at once against what parquet-mr actually wrote; pytest repeats the
     chain against pyarrow-written files (a third writer). Per-file
@@ -3217,8 +3157,8 @@ def scan_parquet_raw_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     skips them), and each chunk's BloomFilterHeader + bitset is parsed
     from the bytes with no parquet library and held to the
     zero-false-negative property under the spec's exact scheme:
-    xxhash64 (seed 0, this repo's own pure implementation — the same
-    one the zstd tier validates checksums with) over each value's
+    xxhash64 (seed 0, this repo's own pure implementation, checked
+    against the JVM by ``fn_xxhash64_pure``) over each value's
     PLAIN encoding, multiply-shift block pick, eight salted 32-bit
     word probes (:func:`read_parquet_bloom_filter`). The key answers
     COUNT per partition by counting the values the filter admits — a

@@ -441,7 +441,10 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import math
 
-    c_nrms = [math.sqrt(_seq_dot(r["c_emb"], r["c_emb"])) for r in refined_rows]
+    # zero norms divide as 1.0, the rule assign() applies
+    c_nrms = [
+        math.sqrt(_seq_dot(r["c_emb"], r["c_emb"])) or 1.0 for r in refined_rows
+    ]
     q_rows = (
         e.where(F.col("vec_id") < N_QUERIES)
         .select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
@@ -452,7 +455,7 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         q_nrm = math.sqrt(_seq_dot(qr["q_emb"], qr["q_emb"]))
         scores = [
             (
-                _seq_dot(qr["q_emb"], r["c_emb"]) / (q_nrm * c_nrm),
+                _seq_dot(qr["q_emb"], r["c_emb"]) / ((q_nrm or 1.0) * c_nrm),
                 int(r["cid"]),
             )
             for r, c_nrm in zip(refined_rows, c_nrms)

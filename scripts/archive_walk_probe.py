@@ -7,7 +7,7 @@ separates the two the way a real corpus is shaped:
 
 1. STAGE (timed separately): build shard-sized archives — ~1000 documents
    per ``.tar`` (stdlib tarfile, an independent writer), compressed with the
-   real ``zstd`` CLI / stdlib lzma — once per scale, stored as a binary
+   native zstd (pyarrow) / stdlib lzma — once per scale, stored as a binary
    column in parquet.
 2. WALK (the headline number): a Spark mapInPandas pass runs the repo's
    walkers (zstd frame decode + checksum-verified ustar walk) over every
@@ -53,10 +53,7 @@ def main() -> None:
         txz_member_walk,
         tzst_member_walk,
     )
-    from dynamic_spark_spark.llmops.zstd import (
-        _zstd_cli_path,
-        zstd_compress_real,
-    )
+    from dynamic_spark_spark.llmops.zstd import zstd_compress
     from dynamic_spark_spark.session import get_spark
 
     spark = get_spark("dss-archive-probe")
@@ -75,8 +72,6 @@ def main() -> None:
     n_docs = docs.count()
     n_shards = max(1, n_docs // DOCS_PER_SHARD)
 
-    cli = _zstd_cli_path()
-
     def stage(batches):
         import pandas as pd
 
@@ -84,7 +79,7 @@ def main() -> None:
             if not len(pdf):
                 continue
             tar = _shard_tar(pdf["doc_id"], pdf["text"])
-            tzst = zstd_compress_real(tar, level=3)
+            tzst = zstd_compress(tar, level=3)
             txz = lzma.compress(tar, preset=1)
             yield pd.DataFrame(
                 {"n_docs": [len(pdf)], "tzst": [tzst], "txz": [txz]}
@@ -146,7 +141,6 @@ def main() -> None:
             "replicas": replicas,
             "docs": n_docs,
             "docs_per_shard": DOCS_PER_SHARD,
-            "zstd_writer": "cli" if cli else "pure-python",
             "formats": results,
         }))
     finally:

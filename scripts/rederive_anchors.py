@@ -1,16 +1,13 @@
 #!/usr/bin/env python
-"""Recompute bench.py's guard anchors from the committed quiet-box
-artifacts (best-recorded-wins) and print what must change.
+"""Print the guard anchors bench.py derives at import from the committed
+quiet-box artifacts (``bench.derive_anchors``), and the bench keys no
+artifact has timed yet (a new quiet trio must record those).
 
-The anchors are test-pinned to the artifacts
-(tests/test_bench_guard.py::test_per_key_anchors_match_recorded_artifacts),
-so this script only REPORTS the values — editing bench.py stays a
-reviewed, committed act, never a silent side effect of running a tool.
+Usage: python scripts/rederive_anchors.py
 """
 
 from __future__ import annotations
 
-import glob
 import importlib.util
 import json
 import os
@@ -24,57 +21,14 @@ def main() -> None:
     )
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
-
-    paths = sorted(
-        glob.glob(os.path.join(_ROOT, "artifacts", "bench_quiet_r1*_run*.json"))
-    )
-    arts = [json.load(open(p)) for p in paths]
-    best: dict[str, float] = {}
-    for a in arts:
-        for k, v in {**a["queries_min"], **a["extended_queries_min"]}.items():
-            if k not in best or v < best[k]:
-                best[k] = v
-    current = [
-        a for a in arts
-        if sorted(a["extended_queries_min"]) == sorted(bench.EXTENDED)
-    ]
-    print(f"artifacts: {[os.path.basename(p) for p in paths]}")
-    if current:
-        ext_best = min(a["extended_min_total_sec"] for a in current)
-        print(f"extended_min_total best: {ext_best} "
-              f"(bench.py has {bench.GUARD_EXTENDED_ANCHOR_MIN_SEC})")
-    else:
-        # the normal state right after the EXTENDED set changes — the
-        # whole point of running this script (r13 review finding #3:
-        # min() over the empty list crashed here)
-        print("NO committed artifact matches the current EXTENDED set — "
-              "record a new quiet trio before re-deriving the total anchor")
-    stale = {
-        k: (bench.PER_KEY_ANCHOR_MIN_SEC.get(k), v)
-        for k, v in sorted(best.items())
-        if bench.PER_KEY_ANCHOR_MIN_SEC.get(k) != v
-    }
-    unanchored = [
-        k for k in bench.HEADLINE + bench.EXTENDED if k not in best
-    ]
-    if unanchored:
-        print(f"UNANCHORED (no recorded artifact value yet — a quiet "
-              f"trio must mint these): {unanchored}")
-    if not stale and not unanchored and current and bench.\
-            GUARD_EXTENDED_ANCHOR_MIN_SEC == min(
-                a["extended_min_total_sec"] for a in current):
-        print("anchors already match the artifacts")
-        return
-    for k, (cur, new) in stale.items():
-        print(f"  {k}: {cur} -> {new}")
-    print("--- paste-ready dict ---")
-    print("PER_KEY_ANCHOR_MIN_SEC = {")
-    for k in bench.HEADLINE + bench.EXTENDED:
-        if k in best:
-            print(f'    "{k}": {best[k]},')
-        else:
-            print(f'    # "{k}": UNANCHORED — record a quiet trio')
-    print("}")
+    print(json.dumps({
+        "extended_total_anchor_sec": bench.GUARD_EXTENDED_ANCHOR_MIN_SEC,
+        "per_key_anchor_sec": bench.PER_KEY_ANCHOR_MIN_SEC,
+        "unanchored": [
+            k for k in bench.HEADLINE + bench.EXTENDED
+            if k not in bench.PER_KEY_ANCHOR_MIN_SEC
+        ],
+    }, indent=1))
 
 
 if __name__ == "__main__":

@@ -38,7 +38,8 @@ def test_dechunk_roundtrip_and_extensions():
 
 
 def test_payload_decode_all_codings():
-    from dynamic_spark_spark.llmops.zstd import zstd_compress_real
+    from dynamic_spark_spark.llmops.native_codec import compress
+    from dynamic_spark_spark.llmops.zstd import zstd_compress
 
     text = ("training corpus document body " * 50).encode()
     cases = [
@@ -47,7 +48,8 @@ def test_payload_decode_all_codings():
         ("deflate", zlib.compress(text)),                 # zlib-wrapped
         ("deflate", (lambda co: co.compress(text) + co.flush())(
             zlib.compressobj(wbits=-15))),                # raw form
-        ("zstd", zstd_compress_real(text)),
+        ("zstd", zstd_compress(text)),
+        ("br", compress("brotli", text)),
     ]
     for enc, wire in cases:
         payload = (
@@ -66,7 +68,7 @@ def test_payload_decode_all_codings():
     )
     assert http_payload_decode(payload) == (404, None, b"body")
     # unknown codings refuse
-    payload = b"HTTP/1.1 200 OK\r\nContent-Encoding: br\r\n\r\nxxxx"
+    payload = b"HTTP/1.1 200 OK\r\nContent-Encoding: compress\r\n\r\nxxxx"
     assert http_payload_decode(payload) is None
     # non-HTTP head refuses
     assert http_payload_decode(b"GARBAGE\r\n\r\nbody") is None
@@ -120,33 +122,6 @@ def test_payload_decode_refusals_from_review():
     for bad in (b"0x5\r\nhello\r\n0\r\n\r\n", b"+5\r\nhello\r\n0\r\n\r\n",
                 b"1_0\r\n" + b"x" * 16 + b"\r\n0\r\n\r\n"):
         assert http_dechunk(bad) is None
-
-
-def test_zstd_dict_truncated_magic_refused():
-    from dynamic_spark_spark.llmops.zstd import (
-        ZSTD_DICT_MAGIC,
-        zstd_parse_dictionary,
-    )
-
-    assert zstd_parse_dictionary(ZSTD_DICT_MAGIC + b"\x01") is None
-    assert zstd_parse_dictionary(ZSTD_DICT_MAGIC) is None
-    # raw-content dictionaries (no magic) still parse
-    got = zstd_parse_dictionary(b"plain prefix bytes")
-    assert got is not None and got[0] == 0
-
-
-def test_zstd_batch_cli_compress():
-    from dynamic_spark_spark.llmops.zstd import (
-        zstd_compress_real_many,
-        zstd_decompress,
-    )
-
-    payloads = [f"payload number {i} ".encode() * (i + 1) for i in range(20)]
-    frames = zstd_compress_real_many(payloads)
-    assert len(frames) == len(payloads)
-    for f, p in zip(frames, payloads):
-        assert zstd_decompress(f) == p
-    assert zstd_compress_real_many([]) == []
 
 
 # ---------------------------------------------------------------------------
@@ -305,111 +280,39 @@ def test_charset_refusals():
     assert http_charset_decode(b"x", "charset") in (("utf-8", "x"), None)
 
 
-def test_br_coding_native_seam(monkeypatch):
-    """`br` decodes ONLY through the import-gated native seam: with no
-    binding it refuses (never guesses), and with a (stubbed) binding
-    the dispatch, error handling, and cap all work."""
-    import zlib
-
-    from dynamic_spark_spark.llmops import html
-
-    payload = (
-        b"HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n"
-        b"Content-Encoding: br\r\n\r\nxxxx"
-    )
-    monkeypatch.setattr(html, "_brotli_mod", None)  # binding absent
-    assert html.http_payload_decode(payload) is None
-
-    class _StubBrotli:
-        """Stands in for the brotli wheel: decompress = zlib inverse."""
-
-        @staticmethod
-        def decompress(b):
-            return zlib.decompress(b)
-
-    monkeypatch.setattr(html, "_brotli_mod", _StubBrotli)
-    wire = zlib.compress(b"hello brotli seam")
-    payload = (
+def _br_payload(wire: bytes) -> bytes:
+    return (
         b"HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n"
         b"Content-Encoding: br\r\n\r\n" + wire
     )
-    got = html.http_payload_decode(payload)
-    assert got is not None and got[2] == b"hello brotli seam"
-    # malformed stream: the binding raises, the seam refuses
-    bad = payload[:-4] + b"\x00\x00\x00\x00"
-    assert html.http_payload_decode(bad) is None
-    # cap: a decode larger than the cap refuses
-    big = zlib.compress(b"A" * 4096)
-    payload = (
-        b"HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n"
-        b"Content-Encoding: br\r\n\r\n" + big
-    )
-    assert html.http_payload_decode(payload, cap=100) is None
 
 
-def test_br_seam_streaming_cap(monkeypatch):
-    """r12 advisor (html.py:1018): the body cap must abort DURING the
-    decode, not after a full one-shot expansion — a small `br` bomb
-    stops within one slice of crossing the cap. Pinned with a stub
-    streaming decompressor (1 MiB out per 64 KiB slice) for both
-    wheels' method spellings (`process` = brotli, `decompress` =
-    brotlicffi) plus the truncated-stream refusal."""
-    from dynamic_spark_spark.llmops import html
+def test_br_coding_native_seam():
+    """`br` decodes through pyarrow's native brotli; malformed,
+    truncated and garbage-trailed streams refuse."""
+    from dynamic_spark_spark.llmops.native_codec import compress
 
-    calls = []
-
-    def _mk(method_name, finished=True):
-        class _Dec:
-            def is_finished(self):
-                return finished
-
-        def _step(self, piece):
-            calls.append(len(piece))
-            return b"A" * (1 << 20)
-
-        setattr(_Dec, method_name, _step)
-
-        class _Stub:
-            Decompressor = _Dec
-
-            @staticmethod
-            def decompress(b):
-                raise AssertionError("one-shot path must not be used")
-
-        return _Stub
-
-    for method in ("process", "decompress"):
-        calls.clear()
-        monkeypatch.setattr(html, "_brotli_mod", _mk(method))
-        # 32 slices → 32 MiB if fully drained; cap 3 MiB must abort
-        body = b"x" * (32 * 65536)
-        assert html.brotli_decode_native(body, cap=3 * (1 << 20)) is None
-        assert len(calls) <= 4, calls  # stopped just past the cap
-        # under the cap: streaming output joins
-        assert html.brotli_decode_native(
-            b"x" * 65536, cap=2 << 20
-        ) == b"A" * (1 << 20)
-
-    # truncated stream (is_finished stays False): refuse
-    monkeypatch.setattr(html, "_brotli_mod", _mk("process", finished=False))
-    assert html.brotli_decode_native(b"x" * 65536, cap=2 << 20) is None
+    wire = compress("brotli", b"hello brotli payload " * 40)
+    got = http_payload_decode(_br_payload(wire))
+    assert got == (200, "text/plain", b"hello brotli payload " * 40)
+    assert http_payload_decode(_br_payload(b"xxxx")) is None
+    assert http_payload_decode(_br_payload(wire[: len(wire) // 2])) is None
+    assert http_payload_decode(_br_payload(wire + b"JUNK")) is None
 
 
-def test_br_seam_real_binding_roundtrip():
-    """When a real brotli wheel IS installed, a genuine round trip must
-    work (named skip otherwise — the seam's contract in this sandbox)."""
-    import pytest
+def test_br_seam_streaming_cap():
+    """The body cap stops a `br` bomb: 64 MiB of zeros compress to a few
+    hundred bytes, and the decode refuses past the cap without holding
+    the full expansion."""
+    import time
 
-    from dynamic_spark_spark.llmops import html
+    from dynamic_spark_spark.llmops.native_codec import compress
 
-    html._brotli_mod = html._BROTLI_UNPROBED  # re-probe honestly
-    mod = html.brotli_backend()
-    if mod is None:
-        pytest.skip("no brotli binding in this environment")
-    wire = mod.compress(b"real brotli payload")
-    payload = (
-        b"HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n"
-        b"Content-Encoding: br\r\n\r\n" + wire
-    )
-    got = html.http_payload_decode(payload)
-    assert got is not None and got[2] == b"real brotli payload"
+    bomb = compress("brotli", bytes(64 << 20))
+    assert len(bomb) < 4096
+    t0 = time.monotonic()
+    assert http_payload_decode(_br_payload(bomb), cap=1 << 20) is None
+    assert time.monotonic() - t0 < 2.0
+    small = compress("brotli", b"A" * 4096)
+    assert http_payload_decode(_br_payload(small), cap=4095) is None
+    assert http_payload_decode(_br_payload(small), cap=4096)[2] == b"A" * 4096

@@ -293,6 +293,38 @@ def test_dedup_minhash_ml_cap_engages(spark, tmp_path):
         dedup_minhash_ml(spark, str(tmp_path))
 
 
+def test_sim_topk_ivf_zero_norm_query(spark, sf_dir, tmp_path):
+    """An all-zero query embedding must not kill sim_topk_ivf: the
+    driver-side probe divides a zero norm as 1.0 (assign()'s rule)
+    instead of raising ZeroDivisionError, and every query still gets
+    its top-k."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from dynamic_spark_spark.llmops.similarity import N_QUERIES, TOP_K, sim_topk_ivf
+
+    t = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    dim = len(t["embedding"][0].as_py())
+    zero = pc.equal(t["vec_id"], 3)
+    emb = [
+        [0.0] * dim if z else v
+        for z, v in zip(zero.to_pylist(), t["embedding"].to_pylist())
+    ]
+    t = t.set_column(
+        t.schema.get_field_index("embedding"),
+        t.schema.field("embedding"),
+        pa.array(emb, type=t.schema.field("embedding").type),
+    )
+    pq.write_table(t, str(tmp_path / "embeddings.parquet"))
+    rows = sim_topk_ivf(spark, str(tmp_path)).collect()
+    per_query: dict[int, int] = {}
+    for r in rows:
+        per_query[r["q_id"]] = per_query.get(r["q_id"], 0) + 1
+    assert sorted(per_query) == list(range(N_QUERIES))
+    assert all(n == TOP_K for n in per_query.values()), per_query
+
+
 def test_posting_list_cascade_bounded_on_hot_keys(spark):
     """_bounded_posting_lists must (a) return exactly the df-capped inverted
     index and (b) never build an uncapped hot-key aggregation buffer: the

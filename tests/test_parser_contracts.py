@@ -284,7 +284,6 @@ def _more_parsers():
         "pdf_text_extract": PDF.pdf_text_extract,
         "zstd_decompress": Z.zstd_decompress,
         "zstd_decompress_concat": Z.zstd_decompress_concat,
-        "zstd_decompress_dict": lambda raw: Z.zstd_decompress_dict(raw, b"prefix dictionary content"),
         "hadoop_lz4_decompress": hadoop_lz4_decompress,
         "http_payload_decode": lambda raw: __import__(
             "dynamic_spark_spark.llmops.html", fromlist=["html"]
