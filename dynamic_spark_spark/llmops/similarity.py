@@ -359,8 +359,9 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "embeddings")
 
-    def assign(corpus: DataFrame, cids: np.ndarray, cmat: np.ndarray) -> DataFrame:
-        """vec_id → best cell against a driver-held centroid model
+    def assign(corpus: DataFrame, cids: np.ndarray, cmat: np.ndarray, *extra: Column) -> DataFrame:
+        """vec_id → best cell (plus ``extra`` columns, evaluated in the same
+        Python node) against a driver-held centroid model
         (|cells|×dim ≈ 4 KB here, |cells| ≤ √n by construction): broadcast
         the arrays, and each Arrow batch scores ALL cells in one BLAS
         matmul + argmax — the dense n×c GEMM tier measured on
@@ -383,9 +384,11 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             sims = (mat @ c.T) / (nrm * cn[None, :])
             return pd.Series(ids[np.argmax(sims, axis=1)])
 
-        return corpus.select(
-            "vec_id", "embedding", best_cell("embedding").alias("cid")
-        )
+        # best_cell never returns null; the coalesce makes cid non-nullable,
+        # so the probe join infers no isnotnull(cid) filter, which, pushed
+        # under this select, ran best_cell in a second Python node
+        cid = F.coalesce(best_cell("embedding"), F.lit(0)).alias("cid")
+        return corpus.select("vec_id", "embedding", cid, *extra)
 
     # Seed centroids collect straight to the driver (cid = 1..IVF_CELLS in
     # hash order) — they are model state either way; enumerating them here
@@ -421,7 +424,8 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ref_mat = np.array([r["c_emb"] for r in refined_rows], dtype=np.float64)
     vec_norm = _batched_vec_norm()
     pair_cos = _batched_pair_cos()
-    cells = assign(e, ref_cids, ref_mat).withColumn("nrm", vec_norm(F.col("embedding")))
+    # cid and nrm in one select: one Python node, one trip of the embedding
+    cells = assign(e, ref_cids, ref_mat, vec_norm("embedding").alias("nrm"))
 
     # Probe selection runs on the DRIVER: the centroid model is already
     # driver-held, the query set is N_QUERIES rows, and the previous form
@@ -1004,6 +1008,11 @@ SEM_MIN_CELLS = 8
 SEM_TAU = 0.40
 #: per-cell cap on the "earlier" comparison side (hot-cell guard)
 SEM_MAX_ANCHORS = 64
+#: the last call's persisted cell table. Its cell UDF closes over a fresh
+#: broadcast, so CacheManager never matches a later call's plan to it and
+#: each call would leave one more entry behind; the next call drops it
+#: (a stopped context has dropped it already).
+_sem_cells: list[DataFrame] = []
 
 
 @query("dedup_semantic", tag="llm-dedup")  # rows-only: cell seeds are engine-hash-based
@@ -1065,12 +1074,17 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_norm = _batched_vec_norm()
     pair_cos = _batched_pair_cos()
 
+    while _sem_cells:
+        prev = _sem_cells.pop()
+        if prev.sparkSession.sparkContext._jsc is not None:
+            prev.unpersist()
     cells = e.select(
         "vec_id",
         "embedding",
         vec_norm("embedding").alias("nrm"),
         best_cell("embedding").alias("cid"),
     ).persist()
+    _sem_cells.append(cells)
     # Hot-cell guard (the discipline every candidate generator in this repo
     # applies — SIM_JOIN_MAX_BUCKET, MAX_SHINGLE_DF, CONTAIN_MAX_DF): the
     # "earlier" comparison side is each cell's first SEM_MAX_ANCHORS members

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Runtime-settable confs applied to any session we are handed (the driver
@@ -86,10 +87,28 @@ def scoped_conf(spark: SparkSession, **confs: str):
                     pass
 
 
+#: the directory holding this package, for the workers' PYTHONPATH
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _put_package_on_worker_path(sc: SparkContext) -> None:
+    """Merge the package root into the workers' ``PYTHONPATH``, so the
+    daemon module imports wherever the driver imports the package.
+    ``sc.environment`` is where PySpark copies ``spark.executorEnv.*`` and
+    what every Python UDF ships to its workers; it is merged here rather
+    than set on the builder, since reading the configured value before the
+    context exists would start the JVM without the builder's settings."""
+    parts = [p for p in sc.environment.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in parts:
+        sc.environment["PYTHONPATH"] = os.pathsep.join([*parts, _PACKAGE_ROOT])
+
+
 def get_spark(app_name: str = "dynamic-spark-spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) a tuned local session.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) else all cores.
+    Python workers fork from :mod:`dynamic_spark_spark.pydaemon`, which stops
+    every task from re-reading ``pyspark.zip`` and the spark-core jar.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -100,5 +119,8 @@ def get_spark(app_name: str = "dynamic-spark-spark", cpus: int | None = None) ->
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "dynamic_spark_spark.pydaemon")
     )
-    return tune(builder.getOrCreate())
+    spark = builder.getOrCreate()
+    _put_package_on_worker_path(spark.sparkContext)
+    return tune(spark)

@@ -846,6 +846,22 @@ def test_dedup_semantic_verdicts_are_sound(spark, sf_dir):
         assert out[r["dup_of"]]["cid"] == r["cid"]
 
 
+def test_dedup_semantic_keeps_one_cache_entry(spark, sf_dir):
+    """Each call persists its cell table under a plan CacheManager cannot
+    match to the last call's (the cell UDF closes over a fresh broadcast);
+    repeated calls in one session must not pile those entries up, and every
+    call still computes the same rows."""
+    from dynamic_spark_spark.llmops.similarity import dedup_semantic
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    counts, outs = [], []
+    for _ in range(3):
+        outs.append(sorted(tuple(r) for r in dedup_semantic(spark, sf_dir).collect()))
+        counts.append(persisted().size())
+    assert counts[2] == counts[0], counts
+    assert outs[0] == outs[1] == outs[2]
+
+
 def test_bpe_segment_respects_token_boundaries():
     """The retired replace-chain formulation collapsed 'there' to one
     out-of-vocab symbol by matching across a merged token's boundary; true

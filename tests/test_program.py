@@ -57,6 +57,48 @@ def test_program_with_dependency_pyfile(spark):
     assert out == [0, 3, 6, 9, 12]
 
 
+def test_py_file_shipped_after_workers_start(spark):
+    """A module shipped once workers are warm imports in a reused worker:
+    the per-task cache invalidation the daemon's stat guard keeps cheap is
+    what makes files shipped later visible there."""
+    from pyspark.sql import functions as F
+
+    # 4x the task slots: each of the idle workers (a queue) runs a task
+    n = 4 * spark.sparkContext.defaultParallelism
+    warm_dir, late_dir = dss_mkdtemp("dss_dep_warm_"), dss_mkdtemp("dss_dep_late_")
+    with open(os.path.join(warm_dir, "dss_warm_dep.py"), "w") as f:
+        f.write("def one(x):\n    return 1\n")
+    add_py_files(spark, [os.path.join(warm_dir, "dss_warm_dep.py")])
+
+    def warm(x):
+        import dss_warm_dep
+
+        return dss_warm_dep.one(x)
+
+    ones = spark.range(n, numPartitions=n).select(F.udf(warm, "long")("id")).collect()
+    assert [r[0] for r in ones] == [1] * n
+
+    with open(os.path.join(late_dir, "dss_late_dep.py"), "w") as f:
+        f.write("def square(x):\n    return x * x\n")
+    add_py_files(spark, [os.path.join(late_dir, "dss_late_dep.py")])
+
+    def late(x):
+        import sys
+
+        reused = "dss_warm_dep" in sys.modules  # this worker ran warm()
+        import dss_late_dep
+
+        return reused, dss_late_dep.square(x)
+
+    rows = (
+        spark.range(n, numPartitions=n)
+        .select(F.udf(late, "struct<reused:boolean,sq:long>")("id").alias("r"))
+        .collect()
+    )
+    assert sorted(r["r"]["sq"] for r in rows) == [i * i for i in range(n)]
+    assert any(r["r"]["reused"] for r in rows)
+
+
 def test_add_py_files_missing(spark):
     with pytest.raises(FileNotFoundError):
         add_py_files(spark, ["/nonexistent/thing.py"])
